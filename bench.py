@@ -334,18 +334,13 @@ STREAM_ROWS = 200_000
 STREAM_FILES = 64
 
 
-def streaming_throughput(spark, sql_sentiment: bool = False, joined: bool = False) -> dict:
+def streaming_throughput(spark, joined: bool = False) -> dict:
     """End-to-end streaming pipeline throughput over a bounded file
     replay: parse -> clean -> sentiment -> hashtag explode ->
     watermarked sliding-window counts, drained with availableNow into the
     noop sink. rows/sec here is the single-node analogue of the
     reference's live path — whose producer self-caps at ~10 msg/s
     (prod:~sleep), the only throughput number BASELINE.md records.
-
-    sql_sentiment=False scores through the Arrow pandas_udf (the
-    model-per-worker path); True uses the pure-SQL lexicon expression —
-    reported side by side so the Python-boundary cost is measured, not
-    guessed.
 
     joined=True drives the PRODUCTION A5 topology instead (VERDICT r4
     item 5): trend_sentiment_joined (two windowed aggs + stream-stream
@@ -406,9 +401,7 @@ def streaming_throughput(spark, sql_sentiment: bool = False, joined: bool = Fals
             spark, source_dir=src, max_files_per_trigger=STREAM_FILES // 2
         )
         scored = transform_tweets(
-            raw,
-            ts_col=F.timestamp_seconds(F.col("key").cast("long")),
-            sql_sentiment=sql_sentiment,
+            raw, ts_col=F.timestamp_seconds(F.col("key").cast("long"))
         )
         if joined:
             out = trend_sentiment_joined(scored)
@@ -990,23 +983,16 @@ def main() -> None:
         return a if (a["rows_per_sec"] or 0) >= (b["rows_per_sec"] or 0) else b
 
     if "stream" in skip:
-        stream = stream_sql = stream_joined = None
+        stream = stream_joined = None
     else:
         streaming_throughput(spark)  # warm-up (checkpoint setup + codegen)
         stream = _best_of_two()
-        # the SQL-sentiment plan is different codegen — warm it separately.
-        # With the let-bound fold + stream-sized shuffle partitions + full
-        # input parallelism, the pure-SQL path beats the Arrow UDF path
-        # (the Python boundary is the residual difference; the regex
-        # cleaning chain, shared by both, is the dominant per-row cost).
-        streaming_throughput(spark, sql_sentiment=True)
-        stream_sql = _best_of_two(sql_sentiment=True)
         # production A5 topology: two windowed aggs + stream-stream join
         # through the foreachBatch production sink (three stateful
         # operators paying state-store commits per partition per batch —
         # the same shuffle-partition sizing rule, applied to more stores)
-        streaming_throughput(spark, sql_sentiment=True, joined=True)
-        stream_joined = _best_of_two(sql_sentiment=True, joined=True)
+        streaming_throughput(spark, joined=True)
+        stream_joined = _best_of_two(joined=True)
 
     if "stream" in skip:
         stream_dedup = stream_corpus = stream_ann = None
@@ -1062,7 +1048,6 @@ def main() -> None:
         "sf": float(sf),
         "ann_recall_at_10": recall,
         "streaming_pipeline": stream,
-        "streaming_pipeline_sql_sentiment": stream_sql,
         "streaming_pipeline_joined": stream_joined,
         "streaming_dedup": stream_dedup,
         "streaming_corpus_pipeline": stream_corpus,
@@ -1090,7 +1075,6 @@ def main() -> None:
         "staging_sec": round(sum(staging_timings.values()), 3),
         "ann_recall_at_10": recall,
         "streaming_pipeline": stream,
-        "streaming_pipeline_sql_sentiment": stream_sql,
         "streaming_pipeline_joined": stream_joined,
         "streaming_dedup": stream_dedup,
         # round-10 paths: rows/s only in the compact line (full dicts ride

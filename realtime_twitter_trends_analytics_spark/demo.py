@@ -5,7 +5,7 @@
 1. Batch: flagship trends query (token counts + mean sentiment + top-k per
    lang) over the driver's documents table.
 2. Streaming: replays tweet-shaped fixture messages through a file source ->
-   sentinel parse -> hashtag explode -> pandas_udf sentiment -> country ->
+   sentinel parse -> hashtag explode -> in-plan SQL sentiment -> country ->
    sliding-window trend counts -> memory sink, printing per-batch observe()
    metrics — the live path of the reference (proc:71-128) on Structured
    Streaming.

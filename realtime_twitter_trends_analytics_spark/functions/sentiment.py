@@ -179,9 +179,9 @@ GENERIC_LEXICON: dict[str, int] = {
 
 
 def score_texts_pandas(texts, lexicon: dict[str, int] | None = None) -> "list[float]":  # pragma: no cover - helper
-    """Plain-Python reference implementation of the same scoring, used by the
-    streaming path's pandas_udf (model-per-worker pattern the reference got
-    wrong by constructing CoreNLP per record, proc:144) and by unit tests.
+    """Plain-Python reference implementation of the same scoring: the unit
+    tests pin the SQL forms (batch and streaming both score in-plan with
+    them) and the vectorized form below against it.
 
     ``lexicon`` swaps the valence table (default: the engine LEXICON) while
     keeping the chunk -> clamp -> length-weighted-mean structure fixed — the
@@ -206,14 +206,14 @@ def score_texts_pandas(texts, lexicon: dict[str, int] | None = None) -> "list[fl
 
 
 def score_texts_pandas_vec(texts, lexicon: dict[str, int] | None = None):
-    """Vectorized (pandas/NumPy) form of ``score_texts_pandas`` — §4.2 of
-    the optimization guide: the Arrow pandas_udf used to hand each 10k-row
-    batch to the per-row Python loop above (~6 µs/row of pure interpreter
-    time on the streaming hot path). This computes the identical scores
-    through C-speed explode/groupby kernels.
+    """Vectorized (pandas/NumPy) form of ``score_texts_pandas`` for
+    Python-side callers scoring pandas batches — §4.2 of the optimization
+    guide: the identical scores through C-speed explode/groupby kernels
+    instead of the per-row Python loop above (~6 µs/row of pure
+    interpreter time).
 
-    Exactness argument (pinned by test_text_functions'
-    vec-vs-reference suite, not just claimed): per-chunk vsum/cls/clen are
+    Exactness argument (pinned by the vec-vs-reference suite in
+    tests/test_sentiment.py, not just claimed): per-chunk vsum/cls/clen are
     small exact integers; num = Σ cls·clen and den = Σ clen are sums of
     exact integers far below 2^53, so float64 accumulation order cannot
     change them; the final division is then bit-identical to the scalar

@@ -1,6 +1,6 @@
 """Grouped-map (applyInPandas) and grouped-agg (pandas_udf GROUPED_AGG)
 operators — the two Python-UDF shapes SURVEY §2.4 lists beyond the scalar
-pandas_udf (streaming sentiment) and mapInPandas (multimodal).
+pandas_udf and mapInPandas (multimodal).
 
 Both are oracle-verified despite crossing the Arrow boundary, via the
 integer-cents trick: ``value`` has 2 decimals, so round(value*100) is an

@@ -397,8 +397,11 @@ def orders_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan predicates to one grouping key. Two scans, one data-sized
     # shuffle pair, one matrix-grain agg; the base/increment/merge
     # structure (and the oracle's full-recompute proof) is unchanged.
-    o2 = o.withColumn("do_", (F.col("od") >= split))
-    li2 = li.withColumn("dl_", (F.col("sd") >= split))
+    # A null date is not past the split: it belongs to the base, so every
+    # joined row lands in exactly one cell (a null flag would fail both
+    # the base and the increment filter and drop the row).
+    o2 = o.withColumn("do_", F.coalesce(F.col("od") >= split, F.lit(False)))
+    li2 = li.withColumn("dl_", F.coalesce(F.col("sd") >= split, F.lit(False)))
     cells = (
         o2.join(li2, o2.o_orderkey == li2.l_orderkey)
         .groupBy("o_orderpriority", "om", "do_", "dl_")

@@ -135,9 +135,8 @@ def driver_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     readout write: 1.13 s default vs 0.57 s at 1 partition). These
     relations are K/grid/value-domain-bounded BY CONSTRUCTION (the repo's
     model-state discipline), so one partition is the right physical shape
-    at any corpus scale; values and schema are unchanged."""
-    if not rows:
-        return spark.createDataFrame([], schema)
+    at any corpus scale, including zero rows; values and schema are
+    unchanged."""
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 

@@ -19,20 +19,19 @@ onto Structured Streaming:
   sink commit log in one mechanism)
 
 Scale notes: watermarks bound all state (the reference's checkpointed window
-RDDs grow without one); sentiment is a batched Arrow pandas_udf with the
-lexicon loaded once per worker — NOT per record like proc:144's CoreNLP.
+RDDs grow without one); sentiment is the lexicon scorer compiled into the
+plan as one SQL expression (score_sql_fast_spark) — no Python worker runs
+on any micro-batch, and no per-record model load like proc:144's CoreNLP.
 """
 
 from __future__ import annotations
 
 import math
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
-from ..functions.sentiment import score_texts_pandas_vec
+from ..functions.sentiment import score_sql_fast_spark
 from ..functions.text import (
     clean_hashtag,
     clean_tweet_text,
@@ -48,17 +47,6 @@ RAW_SCHEMA = StructType(
 # proc:97-102's output schema, with sane names + typed event time kept
 # alongside (the reference only had the batch's epoch-seconds int).
 SCORED_COLUMNS = ["hashtag", "sentiment_score", "sentiment_type", "country"]
-
-
-@F.pandas_udf(DoubleType())
-def sentiment_score_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched sentiment (P11). Lexicon is module state — loaded once
-    per executor, amortized over batches (the reference rebuilt its CoreNLP
-    pipeline per record, proc:144). r15: batches go through the VECTORIZED
-    scorer (§4.2 — C-speed explode/groupby kernels instead of the per-row
-    Python loop; bit-identical scores, pinned by the vec-vs-reference
-    suite in tests/test_text_functions.py)."""
-    return pd.Series(score_texts_pandas_vec(texts), dtype="float64")
 
 
 def use_rocksdb_state_store(spark: SparkSession) -> None:
@@ -118,22 +106,15 @@ def read_raw_stream(
     )
 
 
-def transform_tweets(
-    raw: DataFrame, ts_col: Column | None = None, sql_sentiment: bool = False
-) -> DataFrame:
+def transform_tweets(raw: DataFrame, ts_col: Column | None = None) -> DataFrame:
     """The full per-tweet transform chain (P3-P12), one declarative plan.
     Works identically on batch and streaming DataFrames (unified API).
 
-    sql_sentiment=False scores with the Arrow pandas_udf (the
-    model-per-worker pattern a real classifier needs); True swaps in the
-    pure-SQL lexicon expression — same scores (equivalence is pytest- and
-    oracle-proven via the batch path), zero Python in the stream. The SQL
-    variant uses the let-bound fast form (score_sql_fast_spark): the
-    template form re-sliced the token array per chunk and lost to the
-    Arrow UDF in round-3 bench (47.7k vs 57.1k rows/s). bench.py reports
-    both so the Arrow-boundary cost is a measured number."""
-    from ..functions.sentiment import score_sql_fast_spark
-
+    Sentiment is the let-bound lexicon expression (score_sql_fast_spark),
+    bit-identical to the Python reference scorer (pinned in
+    tests/test_sentiment.py): the whole chain stays inside Catalyst, so a
+    micro-batch starts no Python worker and pays no Arrow round trip —
+    a fixed cost per task that dominates small trend batches."""
     parsed = raw.withColumn("parsed", parse_sentinel(F.col("value")))
     cleaned = (
         parsed.select(
@@ -146,12 +127,7 @@ def transform_tweets(
         # explode AFTER the array filter — one row per qualifying hashtag
         # (P6); whole-tweet sentiment computed ONCE per tweet, not per tag
         # (the reference recomputed it k times, proc:231).
-        .withColumn(
-            "_score",
-            F.expr(score_sql_fast_spark("clean_text"))
-            if sql_sentiment
-            else sentiment_score_udf(F.col("clean_text")),
-        )
+        .withColumn("_score", F.expr(score_sql_fast_spark("clean_text")))
     )
     exploded = cleaned.withColumn(
         "hashtag", F.explode(extract_hashtags(F.col("text")))

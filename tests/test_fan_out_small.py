@@ -18,6 +18,9 @@ Lloyd trainers return centroids as driver rows; collect order of the
 update agg is partition-layout-dependent, so the rows are canonically
 sorted (values are order-invariant — ties break by (d2, cl) in both
 coarse-quantizer faces).
+
+And the other direction: driver_rows_df plans bounded driver rows as ONE
+partition, whatever the row count (zero included).
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from pyspark.sql import functions as F
 
 from realtime_twitter_trends_analytics_spark.operators import ml
 from realtime_twitter_trends_analytics_spark.sources.loaders import (
+    driver_rows_df,
     fan_out_small,
     load_table,
 )
@@ -85,3 +89,11 @@ def test_aggregates_identical_through_fanout(spark, table):
         .collect()
     )
     assert a == b
+
+
+@pytest.mark.parametrize("rows", [[], [(1, "a"), (2, "b"), (3, "c")]], ids=["empty", "rows"])
+def test_driver_rows_df_is_one_partition(spark, rows):
+    assert spark.sparkContext.defaultParallelism > 1
+    df = driver_rows_df(spark, rows, "k int, v string")
+    assert df.rdd.getNumPartitions() == 1
+    assert sorted(map(tuple, df.collect())) == rows

@@ -140,3 +140,34 @@ def test_asof_snapshot_one_row_per_customer(spark, sf_dir):
         | (F.col("effective_to") < F.lit(SCD_AS_OF).cast("date"))
     ).count()
     assert bad == 0
+
+
+def test_join_ivm_keeps_null_date_rows(spark, sf_dir, tmp_path):
+    """A null l_shipdate is neither base nor increment by date, yet the
+    full recompute (the DuckDB oracle) still joins and counts its row:
+    the incremental view must land it in exactly one cell."""
+    import duckdb
+    import pandas as pd
+
+    from realtime_twitter_trends_analytics_spark.operators.layout import (
+        INCR_SPLIT_DATE,
+        _oracle_join_ivm,
+        orders_join_ivm,
+    )
+
+    orders = pd.read_parquet(f"{sf_dir}/orders.parquet").head(40)
+    li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")
+    li = li[li.l_orderkey.isin(orders.o_orderkey)].reset_index(drop=True)
+    # a base-slice order, so the null row is in no delta term at all
+    base = orders.o_orderkey[orders.o_orderdate < INCR_SPLIT_DATE]
+    li.loc[li.l_orderkey.isin(base).idxmax(), "l_shipdate"] = pd.NaT
+    for t, df in (("orders", orders), ("lineitem", li)):
+        df.to_parquet(tmp_path / f"{t}.parquet", index=False, coerce_timestamps="us")
+
+    got = sorted(tuple(r) for r in orders_join_ivm(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    for t in ("orders", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')")
+    want = sorted(con.execute(_oracle_join_ivm()).fetchall())
+    con.close()
+    assert got == want

@@ -78,11 +78,11 @@ def test_duckdb_matches_python_reference(duck):
 
 
 # ---------------------------------------------------------------- vec scorer
-# r15: the streaming pandas_udf scores through the VECTORIZED pandas/NumPy
-# form (§4.2 — the per-row Python loop was ~6 µs/row on the hot path). The
-# scores must be BIT-identical to the scalar reference: every per-chunk
-# term is an exact small integer, the num/den accumulations are exact in
-# float64 (far below 2^53), and the sentinel condition is reproduced.
+# The VECTORIZED pandas/NumPy form (§4.2 — the per-row Python loop costs
+# ~6 µs/row) must score BIT-identically to the scalar reference: every
+# per-chunk term is an exact small integer, the num/den accumulations are
+# exact in float64 (far below 2^53), and the sentinel condition is
+# reproduced.
 def test_vec_scorer_matches_reference_edges():
     from realtime_twitter_trends_analytics_spark.functions.sentiment import (
         score_texts_pandas_vec,

@@ -125,6 +125,30 @@ def test_sentiment_computed_once_per_tweet(spark, fixture_dir):
     assert len({r["sentiment_score"] for r in rows}) == 1
 
 
+@pytest.mark.parametrize("kind", ["batch", "stream"])
+def test_transform_plan_runs_no_python(spark, fixture_dir, tmp_path, kind):
+    """Sentiment is scored in-plan: neither the batch nor the streaming
+    form of the transform may plan a Python evaluation node, whose
+    worker start and Arrow round trip would be a fixed cost on every
+    micro-batch task."""
+    ts = F.timestamp_seconds(F.col("key").cast("long"))
+    if kind == "batch":
+        raw = spark.read.schema("key STRING, value STRING").json(fixture_dir)
+        plan = transform_tweets(raw, ts_col=ts)._jdf.queryExecution().executedPlan().toString()
+    else:
+        q = (
+            transform_tweets(read_raw_stream(spark, source_dir=fixture_dir), ts_col=ts)
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        plan = q._jsq.explainInternal(False)  # the last micro-batch's physical plan
+    assert "Project" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
 def test_streaming_session_windows_merge_across_batches(spark, fixture_dir, tmp_path):
     """session_window in STREAMING mode (batch analogue: trends.
     window_session_per_user): USA rows arrive at t=0 (2 hashtags, batch 1),

@@ -47,9 +47,7 @@ def test_drift_alarm_fires_on_shifted_batch_only(spark, tmp_path):
     )
 
     raw = read_raw_stream(spark, source_dir=str(src), max_files_per_trigger=1)
-    scored = transform_tweets(
-        raw, ts_col=F.timestamp_seconds(F.col("key").cast("long")), sql_sentiment=True
-    )
+    scored = transform_tweets(raw, ts_col=F.timestamp_seconds(F.col("key").cast("long")))
     results: list[dict] = []
     q = write_with_first_batch_setup(
         scored,

@@ -10,16 +10,9 @@ Floor derivation (r8): each floor is <= 0.75x the SLOWEST recorded
 steady-state reading for its path across rounds/boxes — the same margin
 rule the ANN recall floors use (enforce the envelope, record the number).
 
-- sql transform path: recorded band 55-88k rows/s (r5-r7 driver runs +
-  local probes; slowest 55k). Floor 40k = 0.73x slowest.
-- arrow transform path (floor re-derived r15, VERDICT r14 item 3): the
-  r14 driver gate measured 35.5k on its box with the full suite running
-  — a steady-state reading by this file's own cross-box rule, so the 40k
-  floor sat ABOVE a recorded reading and flipped on host phase (the
-  r7 joined-path failure mode again). r15 also moved the scorer to the
-  vectorized pandas form (§4.2; +3% quiet-box, more under load since the
-  removed per-row Python work is what contends with the suite). Floor
-  26k = 0.73x the 35.5k loaded reading; quiet band on this box 46-68k.
+- sql transform path (in-plan SQL sentiment, the engine's only scorer):
+  recorded band 55-88k rows/s (r5-r7 bench runs + local probes; slowest
+  55k). Floor 40k = 0.73x slowest.
 - joined A5 topology (two windowed aggs + stream-stream join, THREE
   stateful operators, and the transform chain computed once per agg
   branch — the chained-stateful pattern's intrinsic 2x on the dominant
@@ -49,14 +42,12 @@ from bench import (  # noqa: E402
 )
 
 FLOORS = {
-    "arrow": 26_000,
     "sql": 40_000,
     "joined": 20_000,
 }
 KWARGS = {
-    "arrow": {},  # Arrow pandas_udf sentiment
-    "sql": {"sql_sentiment": True},
-    "joined": {"sql_sentiment": True, "joined": True},
+    "sql": {},
+    "joined": {"joined": True},
 }
 
 

@@ -130,8 +130,7 @@ def _run_a5(spark, src, work, stop_after_first_batch=False):
     def start():
         raw = read_raw_stream(spark, source_dir=src, max_files_per_trigger=1)
         scored = transform_tweets(
-            raw, ts_col=F.timestamp_seconds(F.col("key").cast("long")),
-            sql_sentiment=True,
+            raw, ts_col=F.timestamp_seconds(F.col("key").cast("long"))
         )
         return write_with_first_batch_setup(
             trend_sentiment_joined(scored),
